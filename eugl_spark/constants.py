@@ -225,15 +225,12 @@ TRIGRAM_PAD = " "
 
 N_BUCKETS: int = 64          # salted host-bucket count at test scale;
                              # production: O(10k) for 10^12 docs.
-# Salts per hot host. Sized to the worst host, not the average: the
-# Zipf-1 host carries ~17% of a crawl, so 8 salts still left one
-# (bucket, salt) key at ~2% of all rows — measured 3.6× partition skew
-# on a 1M-doc run. 64 salts cap any single key at ~0.3% of rows —
-# measured skew 1.7× (residual = multinomial key-mix variance, which
-# AQE's skew handling absorbs) and +21% pipeline throughput on the
-# same input. The only cost is more (smaller) output files per bucket,
-# which compact_bucket exists to fold back.
-SALT_FACTOR: int = 64
+# Salts per bucket are derived, not set: apply_pipeline hashes rows on
+# (bucket, salt) into P partitions with ceil(P / 4) salts. A host with
+# share h of the rows then has salts of h / ceil(P/4) ≤ 1/P (an average
+# task) while h ≤ 1/4, and a bucket is written by ≤ ceil(P/4) tasks.
+# P = 8 (2 salts), 10k crawl pages: 105 files a pass (fixed 64 salts:
+# 472) and -34% CPU per doc; largest task 0.21 of a 1.2k-row Zipf crawl.
 # O(n²) baseline guard: the brute-force ANN / all-pairs Jaccard ops are
 # correctness oracles, not the scale path. Above this many input rows
 # they refuse and point at their sub-quadratic twin (LSH / IVF) rather

@@ -46,8 +46,8 @@ def salted_bucket(url: Column) -> Column:
     return F.pmod(F.xxhash64(host(url)), F.lit(C.N_BUCKETS)).cast("int")
 
 
-def salt(url: Column) -> Column:
-    return F.pmod(F.xxhash64(url), F.lit(C.SALT_FACTOR)).cast("int")
+def salt(url: Column, partitions: int) -> Column:
+    return F.pmod(F.xxhash64(url), F.lit(-(-partitions // 4))).cast("int")
 
 
 def apply_pipeline(
@@ -68,13 +68,13 @@ def apply_pipeline(
     stateless map, so it runs at SCAN parallelism — no shuffle of the
     fat html/text columns (session.py keeps maxPartitionBytes small so
     splits, not files, set the width). The salted repartition on
-    (bucket, salt(url)) happens AFTER the kernel, where keys matter:
-    it clusters rows for the bucketed write / downstream keyed ops and
-    splits a hot host's bucket across SALT_FACTOR tasks. Only the
-    labeled rows (no html) shuffle. An explicit partition count is
-    used so AQE's coalescer (which optimizes for shuffle-size, not
-    CPU) can't re-serialize the write stage. repartition_to=0 disables
-    (tiny inputs / streaming).
+    (bucket, salt(url)) runs AFTER the kernel: ceil(repartition_to/4)
+    salts write each bucket from ≤ that many tasks yet split any host
+    under 1/4 of rows into salts ≤ an average task (constants.py).
+    Only labeled rows (no html) shuffle, in ONE hash Exchange (range
+    partitioning would sample, i.e. re-run, the kernel) to an explicit
+    count, so AQE's coalescer can't re-serialize the write stage.
+    repartition_to=0 disables (tiny inputs / streaming).
     """
     if repartition_to is None:
         repartition_to = int(
@@ -288,6 +288,6 @@ def apply_pipeline(
     )
     if repartition_to:
         out = out.repartition(
-            repartition_to, F.col("bucket"), salt(F.col("url"))
+            repartition_to, F.col("bucket"), salt(F.col("url"), repartition_to)
         )
     return out

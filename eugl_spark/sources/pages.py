@@ -120,9 +120,10 @@ def compact_bucket(
     /root/reference/eugl/fmask.py:695-756): rewrite ONE bucket
     partition's small files into ≈target_bytes files.
 
-    Incremental runs (resume batches, streaming epochs) accumulate
-    small files per bucket; scans then pay per-file open cost. This is
-    the plain-parquet local analog of Iceberg's rewrite_data_files.
+    A pass writes ≤ ceil(P/4) files per bucket (one per salt of
+    apply_pipeline's P-partition write); resume batches and streaming
+    epochs pile them up and scans pay per-file open cost. This is the
+    plain-parquet local analog of Iceberg's rewrite_data_files.
     The compacted copy is written to an underscore-prefixed sibling
     (Spark's partition discovery ignores `_*` paths), then the live
     directory is renamed ASIDE before the new one is renamed in, and

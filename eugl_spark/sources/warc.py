@@ -235,11 +235,12 @@ def split_warc_records(raw: DataFrame, content_col: str = "content") -> DataFram
         # on both paths. Without this the native branch kept the
         # separator inside the body (+4 chars) and exact-dedup across
         # a mixed plain/gz drop silently missed cross-compression
-        # duplicates (ADVICE r5).
+        # duplicates (ADVICE r5). \z, not $: Java's $ also matches
+        # before a final CRLF, eating an empty record's header end.
         .select(
             F.encode(
                 F.regexp_replace(
-                    F.col("_rec"), r"(?s)(\r\n\r\n|\r\n)$", ""
+                    F.col("_rec"), r"(?s)(\r\n\r\n|\r\n)\z", ""
                 ),
                 "UTF-8",
             ).alias("content")

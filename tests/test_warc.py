@@ -149,6 +149,42 @@ def test_split_warc_records_both_paths_agree_on_clean_files(spark, tmp_path):
         assert urls == {"https://a.example/1", "https://a.example/2"}
 
 
+def test_split_paths_agree_on_empty_and_crlf_ending_records(spark, tmp_path):
+    """A zero-length conversion record keeps the blank line that ends
+    its header block, and a body ending in CRLF keeps that CRLF: the
+    separator strip is anchored at the very end of the record (Java's
+    `$` also matches before a final line terminator)."""
+    from eugl_spark.sources.warc import (
+        parse_crawl_records,
+        split_warc_records,
+        split_warc_records_exact,
+    )
+
+    recs = [
+        _wet_record("https://e.example/empty", ""),
+        _wet_record("https://e.example/crlf", "one line\r\nlast line\r\n"),
+        _wet_record("https://e.example/plain", "no trailing newline"),
+    ]
+    d = tmp_path / "edge"
+    d.mkdir()
+    (d / "f.warc").write_bytes(b"\r\n\r\n".join(recs) + b"\r\n\r\n")
+    raw = read_raw_drops(spark, str(d), "*.warc")
+    fast = split_warc_records(raw)
+    exact = split_warc_records_exact(raw)
+    assert sorted(bytes(r["content"]) for r in fast.collect()) == sorted(recs)
+    assert sorted(bytes(r["content"]) for r in exact.collect()) == sorted(recs)
+
+    def rows(split):
+        parsed = parse_crawl_records(split).select("url", "text")
+        return sorted(tuple(r) for r in parsed.collect())
+
+    assert rows(fast) == rows(exact) == [
+        ("https://e.example/crlf", "one line\r\nlast line\r\n"),
+        ("https://e.example/empty", ""),
+        ("https://e.example/plain", "no trailing newline"),
+    ]
+
+
 def test_split_exact_honors_content_length_on_embedded_framing(spark, tmp_path):
     """A WET page ABOUT the WARC format embeds 'WARC/1.0\\r\\n' at
     start-of-line inside its payload. The Content-Length splitter must
