@@ -45,11 +45,6 @@ MH_AB: tuple[tuple[int, int], ...] = (
 )
 SIMHASH_BITS = 48
 
-MINHASH_TYPE = T.StructType(
-    [T.StructField(f"mh{i}", T.LongType()) for i in range(len(MH_AB))]
-)
-
-
 def _flatten(arrays: list) -> tuple[np.ndarray, np.ndarray]:
     """(counts, segment starts) for a batch of per-doc string arrays."""
     counts = np.fromiter(
@@ -156,11 +151,6 @@ def with_minhash_sig(df, sh_col: str = "sh"):
             f"mh{i}", F.array_min(F.transform("_hm", perm(a, b)))
         )
     return out.drop("_hm")
-
-
-@F.pandas_udf(MINHASH_TYPE)
-def minhash_sig_udf(shingles: pd.Series) -> pd.DataFrame:
-    return minhash_batch(shingles)
 
 
 @F.pandas_udf(T.LongType())

@@ -97,8 +97,3 @@ def repair_mojibake(series: pd.Series) -> pd.Series:
         return repaired if len(pat.findall(repaired)) < len(pat.findall(x)) else x
 
     return series.map(_fix)
-
-
-@F.pandas_udf(T.StringType())
-def repair_mojibake_udf(s: pd.Series) -> pd.Series:
-    return repair_mojibake(s)

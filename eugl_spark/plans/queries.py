@@ -1865,8 +1865,9 @@ def embedding_stats(spark, sf_dir):
 
 def _langid_cte(src: str = "documents") -> str:
     """CTEs lang_tok/tri/lid: detected language per doc, mirroring
-    models/langid.py (pad ' tokstr ', count trigram profile hits,
-    first-max argmax in LANGS order, confidence gate to 'und')."""
+    models/doc_kernel.py::_langid (pad ' tokstr ', count trigram
+    profile hits, first-max argmax in LANGS order, confidence gate to
+    'und')."""
     counts = ", ".join(
         "len(list_filter(gs, g -> g IN ("
         + ",".join(f"'{g}'" for g in sorted(C.TRIGRAM_PROFILES[lang]))
@@ -1903,7 +1904,7 @@ _EN_EDGE_SQL = ",".join(
 )
 
 def _ppl_cte(src: str = "documents") -> str:
-    # identical expression SHAPE to models/perplexity.py score_batch:
+    # identical expression SHAPE to models/doc_kernel.py::_nll:
     # nll = -(n_seen·SEEN + (n_pairs - n_seen)·UNSEEN) / n_pairs
     return f"""
     ppl AS (
@@ -1939,7 +1940,7 @@ _PPL_CTE = _ppl_cte()
     "vs an independent SQL reimplementation of the model",
 )
 def udf_langid_documents(spark, sf_dir):
-    from eugl_spark.models.langid import langid_udf
+    from eugl_spark.models.doc_kernel import langid_udf
 
     df = _t(spark, sf_dir, "documents")
     toks = H.tokens(F.col("text"))
@@ -1964,14 +1965,15 @@ def udf_langid_documents(spark, sf_dir):
     "independent SQL reimplementation of the LM",
 )
 def udf_perplexity_documents(spark, sf_dir):
-    from eugl_spark.models.perplexity import perplexity_udf
+    from eugl_spark.models.doc_kernel import perplexity_udf
 
     df = _t(spark, sf_dir, "documents")
     toks = H.tokens(F.col("text"))
     # NaN (docs with <2 tokens / null text) → null, so Spark's
     # null-skipping aggregates mirror SQL NULL semantics
     nll = F.nanvl(
-        perplexity_udf(toks, F.lit("en")), F.lit(None).cast("double")
+        perplexity_udf(F.concat_ws(" ", toks), F.lit("en")),
+        F.lit(None).cast("double"),
     )
     return (
         df.withColumn("nll", nll)
@@ -2017,12 +2019,13 @@ def qf_ppl_buckets(spark, sf_dir):
     execution-only: the emitted rank equals the global per-lang rank
     regardless of granularity (pinned by the DuckDB oracle, which
     ranks directly)."""
-    from eugl_spark.models.perplexity import perplexity_udf
+    from eugl_spark.models.doc_kernel import perplexity_udf
 
     df = _t(spark, sf_dir, "documents")
     toks = H.tokens(F.col("text"))
     nll = F.nanvl(
-        perplexity_udf(toks, F.lit("en")), F.lit(None).cast("double")
+        perplexity_udf(F.concat_ws(" ", toks), F.lit("en")),
+        F.lit(None).cast("double"),
     )
     # _lk: null-safe grouping twin of lang — the offsets REJOIN is an
     # equi-join, whose null keys never match, so null-lang docs (the
@@ -3072,6 +3075,29 @@ def crawl_corpus_from(
     )
 
 
+def _cc_sql(pairs: str, a: str, b: str) -> str:
+    """CTEs sym/reach (the query needs WITH RECURSIVE): connected
+    components of the undirected graph with one edge per row (a, b) of
+    relation `pairs`. reach(id, r) holds every node r reachable from
+    id, so min(r) per id is its component's min-label representative;
+    a node without an edge has no row."""
+    return f"""sym AS (
+      SELECT {a} AS u, {b} AS v FROM {pairs}
+      UNION ALL
+      SELECT {b} AS u, {a} AS v FROM {pairs}
+    ), reach(id, r) AS (
+      SELECT DISTINCT u AS id, u AS r FROM sym
+      UNION
+      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
+    )"""
+
+
+# near-dup verdict over _cc_sql: cluster = min doc id, the keeper
+_CC_KEEP_SQL = """SELECT id AS doc_id, min(r) AS cluster, min(r) = id AS keep
+    FROM reach GROUP BY id
+"""
+
+
 def _host_components_sql(path: str | None = None) -> str:
     """Recursive-CTE oracle for host-graph connected components —
     reach directly over host STRINGS (min over strings is the
@@ -3084,15 +3110,9 @@ def _host_components_sql(path: str | None = None) -> str:
             "WITH pages", "WITH RECURSIVE pages", 1
         )
         + """
-    , sym AS (
-      SELECT src AS u, dst AS v FROM edges
-      UNION ALL
-      SELECT dst AS u, src AS v FROM edges
-    ), reach(id, r) AS (
-      SELECT DISTINCT u AS id, u AS r FROM sym
-      UNION
-      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
-    ), lab AS MATERIALIZED (
+    , """
+        + _cc_sql("edges", "src", "dst")
+        + """, lab AS MATERIALIZED (
       SELECT id AS host, min(r) AS component FROM reach GROUP BY id
     )
     SELECT l.host, l.component, cs.component_size
@@ -3303,8 +3323,10 @@ def _span_cov_agg(hits: DataFrame, n: int) -> DataFrame:
     bytes»): the interval union is a per-doc ARRAY expression —
     collect the hit starts (one small groupBy over the hits frame,
     which holds only duplicated grams), expand each to its n covered
-    positions and array_distinct in place. Per-doc state is O(doc
-    length) ints — the same bound as holding the toks row."""
+    positions and array_distinct in place. The aggregation buffer
+    holds every expanded sequence before the flatten: O(n ×
+    duplicated grams) ints per doc, up to ~n× the doc's token count
+    for a fully duplicated doc, all in one buffer."""
     return hits.groupBy("doc_id").agg(
         F.count("*").alias("n_dup_grams"),
         F.array_distinct(
@@ -4979,18 +5001,8 @@ def ann_ivf_topk(spark, sf_dir):
     "dedup_embedding_clusters",
     f"""
     WITH RECURSIVE lsh_pairs AS ({_LSH_PAIRS_SQL}),
-    sym AS (
-      SELECT id_a AS u, id_b AS v FROM lsh_pairs
-      UNION ALL
-      SELECT id_b AS u, id_a AS v FROM lsh_pairs
-    ), reach(id, r) AS (
-      SELECT DISTINCT u AS id, u AS r FROM sym
-      UNION
-      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
-    )
-    SELECT id AS doc_id, min(r) AS cluster, min(r) = id AS keep
-    FROM reach GROUP BY id
-    """,
+    {_cc_sql("lsh_pairs", "id_a", "id_b")}
+    {_CC_KEEP_SQL}""",
     "Embedding-modality near-dup verdict: bucketed cosine pairs "
     "(ann_lsh_pairs) → connected components → keeper per cluster — "
     "the semantic-dedup counterpart of the text-shingle clustering",
@@ -5369,18 +5381,8 @@ _NEAR_DUP_JACCARD = 0.5
     WITH RECURSIVE nd_pairs AS (
       SELECT doc_a, doc_b FROM ({_JACCARD_SQL})
       WHERE jaccard >= {_NEAR_DUP_JACCARD}
-    ), sym AS (
-      SELECT doc_a AS u, doc_b AS v FROM nd_pairs
-      UNION ALL
-      SELECT doc_b AS u, doc_a AS v FROM nd_pairs
-    ), reach(id, r) AS (
-      SELECT DISTINCT u AS id, u AS r FROM sym
-      UNION
-      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
-    )
-    SELECT id AS doc_id, min(r) AS cluster, min(r) = id AS keep
-    FROM reach GROUP BY id
-    """,
+    ), {_cc_sql("nd_pairs", "doc_a", "doc_b")}
+    {_CC_KEEP_SQL}""",
     "Near-dup clustering: connected components over jaccard>=0.5 pairs "
     "(iterative min-label propagation), keeper = min doc_id per cluster",
 )
@@ -5436,18 +5438,8 @@ _MHC_SQL = f"""
         JOIN sh a ON a.doc_id = c.doc_a
         JOIN sh b ON b.doc_id = c.doc_b)
       WHERE c2 >= 2 AND round(c2 / (na + nb - c2), 6) >= {_NEAR_DUP_JACCARD}
-    ), sym AS (
-      SELECT doc_a AS u, doc_b AS v FROM ver
-      UNION ALL
-      SELECT doc_b AS u, doc_a AS v FROM ver
-    ), reach(id, r) AS (
-      SELECT DISTINCT u AS id, u AS r FROM sym
-      UNION
-      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
-    )
-    SELECT id AS doc_id, min(r) AS cluster, min(r) = id AS keep
-    FROM reach GROUP BY id
-    """,
+    ), {_cc_sql("ver", "doc_a", "doc_b")}
+    {_CC_KEEP_SQL}""",
     "Scale-path near-dup clustering: MinHash band candidates → exact "
     "jaccard verify on candidate pairs only (array_intersect of the "
     "two shingle sets, no posting self-join) → connected components",
@@ -7832,8 +7824,9 @@ REGISTRY["corpus_shard_sequences"].sql = f"""
 
 
 def _datasheet_stats(vc: DataFrame) -> DataFrame:
-    """(lang, n_chars, cnt) value histogram → one row per lang with
-    n_docs, total/mean chars and EXACT p50/p90.
+    """(*key, n_chars, cnt) value histogram → one row per key (every
+    other column of vc, e.g. lang) with n_docs, total/mean chars and
+    EXACT p50/p90.
 
     The scale-safe exact-percentile recipe (VERDICT r6 wrong #1): the
     old plan's ``F.percentile`` buffers every value of a group in one
@@ -7849,18 +7842,19 @@ def _datasheet_stats(vc: DataFrame) -> DataFrame:
     aggregate's (oracle-pinned). Null n_chars rows count toward
     n_docs (count(*)) but not toward the mean/percentile population,
     matching avg/percentile null semantics."""
-    g = vc.groupBy("lang").agg(
+    k = [c for c in vc.columns if c not in ("n_chars", "cnt")]
+    g = vc.groupBy(*k).agg(
         F.sum("cnt").alias("n_docs"),
         F.sum(
             F.when(F.col("n_chars").isNotNull(), F.col("cnt"))
         ).alias("_nn"),
         F.sum(F.col("n_chars") * F.col("cnt")).alias("total_chars"),
     )
-    w = W.partitionBy("lang").orderBy("n_chars")
+    w = W.partitionBy(*k).orderBy("n_chars")
     e = vc.filter(F.col("n_chars").isNotNull()).withColumn(
         "_cum", F.sum("cnt").over(w.rowsBetween(W.unboundedPreceding, 0))
     )
-    j = e.join(F.broadcast(g), "lang")
+    j = e.join(F.broadcast(g), k)
 
     def order_stats(p: float):
         pos = F.lit(p) * (F.col("_nn") - 1)
@@ -7875,7 +7869,7 @@ def _datasheet_stats(vc: DataFrame) -> DataFrame:
 
     l50, h50 = order_stats(0.5)
     l90, h90 = order_stats(0.9)
-    agg = j.groupBy("lang", "n_docs", "_nn", "total_chars").agg(
+    agg = j.groupBy(*k, "n_docs", "_nn", "total_chars").agg(
         l50.alias("_l50"),
         h50.alias("_h50"),
         l90.alias("_l90"),
@@ -7883,8 +7877,7 @@ def _datasheet_stats(vc: DataFrame) -> DataFrame:
     )
     # langs whose every n_chars is null never reach `e`: restore them
     # from g with null stats (percentile/avg of an all-null column)
-    agg = g.join(agg.select("lang", "_l50", "_h50", "_l90", "_h90"),
-                 "lang", "left")
+    agg = g.join(agg.select(*k, "_l50", "_h50", "_l90", "_h90"), k, "left")
 
     def interp(p: float, lo_col: str, hi_col: str) -> Column:
         pos = F.lit(p) * (F.col("_nn") - 1)
@@ -7898,7 +7891,7 @@ def _datasheet_stats(vc: DataFrame) -> DataFrame:
         )
 
     return agg.select(
-        "lang",
+        *k,
         F.col("n_docs").cast("long").alias("n_docs"),
         F.col("total_chars").cast("long").alias("total_chars"),
         F.when(
@@ -7945,7 +7938,9 @@ def _datasheet_stats(vc: DataFrame) -> DataFrame:
 def corpus_datasheet(spark, sf_dir):
     """Data-null langs coalesce to '(none)' BEFORE the aggregation in
     both engines, so the grand-total row ('(all)') is never conflated
-    with null-lang documents.
+    with null-lang documents. The total row is keyed by its own _all
+    flag, not by its label: a document whose lang IS '(all)' keeps a
+    row of its own, as in the oracle's GROUPING SETS.
 
     One corpus pass builds the (lang, n_chars, cnt) value histogram;
     the per-lang rows and the '(all)' row both derive from that
@@ -7962,12 +7957,19 @@ def corpus_datasheet(spark, sf_dir):
     all_vc = (
         vc.groupBy("n_chars")
         .agg(F.sum("cnt").alias("cnt"))
-        .select(F.lit("(all)").alias("lang"), "n_chars", "cnt")
+        .select(
+            F.lit(True).alias("_all"),
+            F.lit("(all)").alias("lang"),
+            "n_chars",
+            "cnt",
+        )
     )
     # ONE stats pass over the per-lang ∪ '(all)' histograms: '(all)'
-    # is just one more lang partition of the same window/aggregate,
-    # so the grand-total row costs no extra jobs
-    stats = _datasheet_stats(vc.unionByName(all_vc))
+    # is just one more (_all, lang) partition of the same window/
+    # aggregate, so the grand-total row costs no extra jobs
+    stats = _datasheet_stats(
+        vc.withColumn("_all", F.lit(False)).unionByName(all_vc)
+    )
     total = vc.agg(F.sum("cnt").alias("n"))
     return stats.crossJoin(F.broadcast(total)).select(
         "lang",

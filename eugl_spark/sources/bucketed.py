@@ -86,19 +86,6 @@ def write_bucketed(
     w.option("path", path).saveAsTable(name)
 
 
-def write_corpus_bucketed(
-    pages: DataFrame,
-    name: str,
-    path: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
-    """The pages-table convenience: derive ``host`` (shared contract)
-    and write the corpus host-bucketed, url-sorted within buckets."""
-    write_bucketed(
-        with_host(pages), name, path, n_buckets=n_buckets, sort_cols=("url",)
-    )
-
-
 def attach_bucketed(
     spark: SparkSession,
     name: str,

@@ -10,6 +10,7 @@ detail, never a semantic one.
 
 from __future__ import annotations
 
+import random
 from hashlib import md5
 
 import numpy as np
@@ -17,6 +18,9 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from eugl_spark import constants as C
+from eugl_spark import oracle
+from eugl_spark.models.doc_kernel import _encode, _langid, _nll
 from eugl_spark.models.embedding_kernels import (
     _IVF_W,
     _LSH_W,
@@ -141,3 +145,46 @@ def test_cosine_matches_sequential_fold(avs, bvs):
         # bit-exact when defined (same fold order); NaN==NaN for the
         # zero-vector corner
         assert (np.isnan(g) and np.isnan(want)) or g == want
+
+
+def _same(a: float, b: float) -> bool:
+    return (np.isnan(a) and np.isnan(b)) or a == b
+
+
+def test_model_functions_match_oracle_at_any_length():
+    """_encode/_langid/_nll (the one langid and perplexity
+    implementation) equal oracle.detect_lang / oracle.avg_nll doc by
+    doc: seeded random token strings, null and empty strings, and a
+    doc with over 65,535 trigram hits for one language — more than a
+    16-bit counting lane holds, so it fails if the lane sums ever span
+    more than a segment."""
+    rng = random.Random(11)
+    vocab = sorted({w for l in C.LANGS for w in C.WORDS[l]})
+    docs = [
+        " ".join(
+            rng.choice(vocab)
+            if rng.random() < 0.8
+            else "".join(
+                rng.choice("abcdefghijklmnopqrstuvwxyz")
+                for _ in range(rng.randint(1, 16))
+            )
+            for _ in range(rng.choice([1, 2, 5, 40, 300]))
+        )
+        for _ in range(400)
+    ]
+    long_de = ("der die das und ist nicht " * 20000).strip()
+    docs += [None, "", long_de]
+    rng.shuffle(docs)
+    toks = [(d or "").split() for d in docs]
+    buf, lens, starts, _, gid, doc_of = _encode(
+        pd.Series(docs, dtype=object).fillna("").tolist()
+    )
+    langs, conf = _langid(buf, lens, starts)
+    for i, t in enumerate(toks):
+        want_lang, want_conf = oracle.detect_lang(t)
+        assert (langs[i], _same(conf[i], want_conf)) == (want_lang, True), i
+    assert langs[docs.index(long_de)] == "de"
+    for lang in (*C.LANGS, "und", None):
+        nll = _nll(gid, doc_of, len(docs), np.full(len(docs), lang, object))
+        for i, t in enumerate(toks):
+            assert _same(nll[i], oracle.avg_nll(t, lang)), (lang, i)

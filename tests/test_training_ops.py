@@ -600,6 +600,41 @@ def test_datasheet_total_row_consistency(spark, sf_dir):
     assert abs(total["doc_share"] - 1.0) < 1e-9
 
 
+def test_datasheet_lang_named_all_matches_oracle(spark, tmp_path):
+    """A document whose lang is literally '(all)' keeps its own row
+    beside the grand total, as the oracle's GROUPING SETS does — the
+    total row must not be keyed by its printed label."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eugl_spark.plans.compare import compare_frames
+
+    langs = ["en", "(all)", "de", None, "(all)", "en", "(none)"] * 3
+    d = str(tmp_path / "alllang")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(langs)), pa.int64()),
+                "lang": pa.array(langs, pa.string()),
+                "n_chars": pa.array(
+                    [100 + 37 * i for i in range(len(langs))], pa.int64()
+                ),
+            }
+        ),
+        os.path.join(d, "documents.parquet"),
+    )
+    q = REGISTRY["corpus_datasheet"]
+    pdf = q.spark(spark, d).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
+    res = compare_frames(pdf, con.sql(q.sql).df())
+    assert res["values_match"], res["diff"]
+    assert (pdf["lang"] == "(all)").sum() == 2
+
+
 def test_pack_payload_matches_stats(spark, sf_dir):
     """Payload and stats share the offset contract: per-sequence
     token count identical, payload token stream concatenated over
