@@ -57,20 +57,39 @@ def _out_path(out_dir: str) -> str:
     return os.path.join(out_dir, "pages_out")
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = _lineage_path(out_dir)
+def _lineage_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """LINEAGE_SCHEMA rows (missing keys → null) as a frame built from
+    an Arrow table. It plans as a LocalTableScan, so writing or reading
+    it starts no Python task; ``createDataFrame(list)`` plans as an RDD
+    scan whose every action starts Python worker tasks, each with a
+    fixed CPU cost however few rows it holds."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
+    return spark.createDataFrame(table, LINEAGE_SCHEMA)
+
+
+def _lineage_missing(out_dir: str) -> bool:
     # existence pre-check: avoids Spark logging a FileNotFound stack
     # trace on every first run (local paths; remote FS falls through
-    # to the try/except)
-    if "://" not in path and not os.path.exists(path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    # to the read's try/except)
+    path = _lineage_path(out_dir)
+    return "://" not in path and not os.path.exists(path)
+
+
+def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    if _lineage_missing(out_dir):
+        return _lineage_frame(spark, [])
     try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_path(out_dir))
     except Exception:  # first run: no lineage yet
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return _lineage_frame(spark, [])
 
 
 def done_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+    if _lineage_missing(out_dir):  # first run: nothing is done, no job
+        return set()
     lin = read_lineage(spark, out_dir)
     rows = (
         lin.filter((F.col("run_id") == run_id) & (F.col("status") == "ok"))
@@ -102,10 +121,13 @@ def lineage_report(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, rows: list[dict]) -> None:
-    spark.createDataFrame(
-        [tuple(r.get(f.name) for f in LINEAGE_SCHEMA.fields) for r in rows],
-        LINEAGE_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(_lineage_path(out_dir))
+    _lineage_frame(spark, rows).coalesce(1).write.mode("append").parquet(
+        _lineage_path(out_dir)
+    )
+
+
+# the columns the counter read-back needs; `bucket` is the partition column
+_STATS_SCHEMA = "run_id string, drop_reason string, keep boolean, bucket int"
 
 
 def _bucket_stats(
@@ -127,31 +149,15 @@ def _bucket_stats(
     run 1's rows — without the filter those stale rows would inflate
     run 2's n_input/n_kept.
     """
-    # mergeSchema: an out_dir first written by a pre-run_id version
-    # mixes files with and without the column; without merging, the
-    # inferred schema follows an arbitrary file and the filter can
-    # fail to resolve. Old-version rows surface as run_id NULL and are
-    # correctly excluded; a directory with no run_id column anywhere
-    # (pure old-version) keeps the legacy single-run semantics.
-    try:
-        out = spark.read.option("mergeSchema", "true").parquet(
-            _out_path(out_dir)
-        )
-    except Exception:
-        # a SUCCESSFUL write of zero rows leaves a directory with only
-        # _SUCCESS (no data files) → UNABLE_TO_INFER_SCHEMA. That is
-        # an empty batch, NOT a failure: without this, every bucket of
-        # an empty batch is spuriously marked 'failed' and a truly
-        # empty input never converges to 'ok' even on resume
-        out = spark.createDataFrame(
-            [],
-            "bucket int, drop_reason string, keep boolean, run_id string",
-        )
-    run_filter = (
-        (F.col("run_id") == run_id) if "run_id" in out.columns else F.lit(True)
-    )
+    # an explicit schema, not mergeSchema: no job reads every footer to
+    # infer one. An out_dir first written by a pre-run_id version mixes
+    # files with and without the column; its old rows read as run_id
+    # NULL and are excluded, so a zero-row run over a purely old
+    # directory counts 0. A successful zero-row write leaves only
+    # _SUCCESS, which reads as an empty frame (0 counters, status ok).
+    out = spark.read.schema(_STATS_SCHEMA).parquet(_out_path(out_dir))
     return (
-        out.filter(F.col("bucket").isin(buckets) & run_filter)
+        out.filter(F.col("bucket").isin(buckets) & (F.col("run_id") == run_id))
         .select("bucket", "drop_reason", "keep")
         .groupBy("bucket", F.coalesce("drop_reason", F.lit("KEEP")).alias("reason"))
         .agg(
@@ -159,6 +165,17 @@ def _bucket_stats(
             F.sum(F.col("keep").cast("long")).alias("n_kept"),
         )
     )
+
+
+def _batch_rows(labeled: DataFrame, batch: list[int]) -> DataFrame:
+    """The rows of ``labeled`` in the buckets of ``batch`` (distinct
+    bucket numbers). A batch of every bucket needs no filter: bucket =
+    pmod(hash, N_BUCKETS) is never null nor out of range, and Catalyst
+    would push the filter below the kernel, running the host regex and
+    the hash there a second time."""
+    if len(batch) == C.N_BUCKETS:
+        return labeled
+    return labeled.filter(F.col("bucket").isin(batch))
 
 
 def run_with_resume(
@@ -212,7 +229,7 @@ def run_with_resume(
     counters: dict[str, int] = {}
     for bi, batch in enumerate(batches):
         obs = Observation(f"qa_counters_{run_id}_{bi}")
-        subset = labeled.filter(F.col("bucket").isin(batch)).observe(
+        subset = _batch_rows(labeled, batch).observe(
             obs,
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.col("keep").cast("long")).alias("n_kept"),

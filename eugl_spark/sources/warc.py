@@ -95,6 +95,21 @@ def _envelope_fields(body, head, is_response):
     return status, entity, flag
 
 
+def _parse_once(raw: DataFrame, *cols) -> DataFrame:
+    """``raw.select(*cols)`` behind a barrier to filter pushdown.
+
+    Catalyst pushes a filter on a projection's aliases below it with
+    the aliased expressions inlined, so filtering on ``url`` or
+    ``http_status`` would run the decode and the header, URI and status
+    regexes once in the Filter and again in the Project. A filter
+    cannot pass a generator, so a one-row ``inline`` over the projected
+    columns keeps every later filter above the projection, where the
+    shared subexpressions (decode, header block) are evaluated once per
+    record."""
+    parsed = raw.select(*cols)
+    return parsed.select(F.inline(F.array(F.struct(*parsed.columns))))
+
+
 def parse_warc_records(raw: DataFrame, content_col: str = "content") -> DataFrame:
     """raw(content: binary, ...) → pages(url, warc_ts, html, text,
     lang, http_status, ingest_flag).
@@ -110,23 +125,18 @@ def parse_warc_records(raw: DataFrame, content_col: str = "content") -> DataFram
     """
     url, ts, body, head = _record_fields(content_col)
     status, entity, flag = _envelope_fields(body, head, F.lit(True))
-    return (
-        raw.select(
-            url.alias("url"),
-            ts.alias("warc_ts"),
-            F.encode(entity, "UTF-8").alias("html"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            status.alias("http_status"),
-            flag.alias("ingest_flag"),
-        )
-        .filter(
-            F.col("url").isNotNull()
-            & (
-                F.col("http_status").isNull()
-                | F.col("http_status").between(200, 299)
-            )
-        )
+    return _parse_once(
+        raw,
+        url.alias("url"),
+        ts.alias("warc_ts"),
+        F.encode(entity, "UTF-8").alias("html"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit(None).cast("string").alias("lang"),
+        status.alias("http_status"),
+        flag.alias("ingest_flag"),
+    ).filter(
+        F.col("url").isNotNull()
+        & (F.col("http_status").isNull() | F.col("http_status").between(200, 299))
     )
 
 
@@ -173,12 +183,11 @@ def parse_crawl_records(
         )
     )
     return (
-        raw.select(
+        _parse_once(
+            raw,
             url.alias("url"),
             ts.alias("warc_ts"),
-            F.when(rtype == "response", F.encode(entity, "UTF-8")).alias(
-                "html"
-            ),
+            F.when(rtype == "response", F.encode(entity, "UTF-8")).alias("html"),
             F.when(rtype == "conversion", body).alias("text"),
             F.lit(None).cast("string").alias("lang"),
             status.alias("http_status"),

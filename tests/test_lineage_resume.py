@@ -143,9 +143,9 @@ def test_lineage_report(spark, pages, tmp_path):
 
 def test_counters_survive_pre_run_id_output_files(spark, pages, tmp_path):
     """An out_dir first written by a pre-run_id version mixes files
-    with and without the column; the read-back must mergeSchema (old
-    rows surface as run_id NULL and are excluded) instead of failing
-    on an unresolvable column or silently counting stale rows."""
+    with and without the column; the read-back's pinned schema reads
+    old rows as run_id NULL and excludes them, instead of failing on an
+    unresolvable column or silently counting stale rows."""
     from eugl_spark.lineage import _bucket_stats, _out_path
 
     out = str(tmp_path / "o")
@@ -192,3 +192,115 @@ def test_empty_batch_is_ok_not_failed(spark, tmp_path):
     rows = read_lineage(spark, out).collect()
     assert rows and all(r["status"] == "ok" for r in rows)
     assert all(r["n_input"] == 0 for r in rows)
+
+
+def test_zero_row_run_over_legacy_output_counts_zero(spark, tmp_path):
+    """A directory written entirely before run_id existed: a run that
+    writes no rows counts 0 for its buckets (that run's true count), not
+    the legacy rows."""
+    from eugl_spark.lineage import _bucket_stats, _out_path
+
+    out = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(b, True, None) for b in range(4)],
+        "bucket int, keep boolean, drop_reason string",
+    ).write.partitionBy("bucket").parquet(_out_path(out))
+    assert _bucket_stats(spark, out, list(range(C.N_BUCKETS)), "r2").collect() == []
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lineage_frames_start_no_python_task(spark, tmp_path):
+    """The _lineage bookkeeping plans as a LocalTableScan, and the first
+    run's resume check starts no Spark job: an RDD scan of a Python list
+    starts a Python worker task per partition for every action."""
+    from eugl_spark.lineage import _lineage_frame
+
+    row = {"run_id": "r", "bucket": 1, "status": "ok", "n_input": 1}
+    out = str(tmp_path / "fresh")
+    for df in (_lineage_frame(spark, [row]), read_lineage(spark, out)):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("done_buckets_probe", "done_buckets on a fresh out_dir")
+    try:
+        assert done_buckets(spark, out, "r") == set()
+        assert sc.statusTracker().getJobIdsForGroup("done_buckets_probe") == []
+        spark.range(3).collect()  # the probe does see a job
+        assert sc.statusTracker().getJobIdsForGroup("done_buckets_probe")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_lineage_rows_match_list_built_rows(spark, tmp_path):
+    """_lineage rows for an ok, a failed (null counters, error text) and
+    an empty bucket are written with the schema, nullability, map
+    contents and values that ``createDataFrame(list, LINEAGE_SCHEMA)``
+    gives them. Only the order of a map's entries may differ: the list
+    path passes a dict through a Java HashMap."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eugl_spark.lineage import LINEAGE_SCHEMA, _append_lineage
+
+    t = datetime(2024, 3, 1, 12, 0, 0, 123456, tzinfo=timezone.utc)
+    sv = dict(C.STAGE_VERSIONS)
+    rows = [
+        {"run_id": "r", "bucket": 3, "status": "ok", "n_input": 7,
+         "n_kept": 5, "n_dropped": 2,
+         "drop_reason_counts": {"KEEP": 5, "too_short": 2},
+         "stage_versions": sv, "error": None, "finished_at": t},
+        {"run_id": "r", "bucket": 4, "status": "failed",
+         "stage_versions": sv, "error": "RuntimeError: boom\n  at x",
+         "finished_at": t},
+        {"run_id": "r", "bucket": 5, "status": "ok", "n_input": 0,
+         "n_kept": 0, "n_dropped": 0, "drop_reason_counts": {},
+         "stage_versions": sv, "error": None, "finished_at": t},
+    ]
+    new, ref = str(tmp_path / "new"), str(tmp_path / "ref")
+    _append_lineage(spark, new, rows)
+    spark.createDataFrame(
+        [tuple(r.get(f.name) for f in LINEAGE_SCHEMA.fields) for r in rows],
+        LINEAGE_SCHEMA,
+    ).coalesce(1).write.parquet(f"{ref}/_lineage")
+
+    a = pq.read_table(f"{new}/_lineage")
+    b = pq.read_table(f"{ref}/_lineage")
+    assert a.schema.equals(b.schema, check_metadata=True)
+    for name in a.column_names:
+        x, y = a[name].to_pylist(), b[name].to_pylist()
+        if pa.types.is_map(a.schema.field(name).type):
+            x, y = ([None if m is None else dict(m) for m in v] for v in (x, y))
+        assert x == y, name
+    got, want = read_lineage(spark, new), read_lineage(spark, ref)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    failed = [r for r in got.collect() if r["status"] == "failed"][0]
+    assert failed["n_input"] is None and failed["drop_reason_counts"] is None
+    assert failed["error"].startswith("RuntimeError: boom")
+
+
+def test_full_batch_adds_no_filter_below_the_kernel(spark, pages):
+    """A batch of every bucket is the whole labeled frame: no bucket
+    filter, which Catalyst would push below the kernel to run the host
+    regex and xxhash64 a second time. A partial batch keeps its filter."""
+    from eugl_spark.lineage import _batch_rows
+    from eugl_spark.pipeline import apply_pipeline
+
+    labeled = apply_pipeline(pages)
+
+    def hashing_filters(df):
+        return [
+            line for line in _plan(df).splitlines()
+            if "Filter" in line and "xxhash64" in line
+        ]
+
+    assert _batch_rows(labeled, list(range(C.N_BUCKETS))) is labeled
+    assert hashing_filters(_batch_rows(labeled, list(range(C.N_BUCKETS)))) == []
+    assert hashing_filters(_batch_rows(labeled, [0, 1]))

@@ -1002,3 +1002,34 @@ def test_revisit_resolution_semantics(spark):
     # the winner per digest is unique: no revisit resolves to two rows
     assert len(rows) == len({(r["url"], r["ts_epoch"], r["digest"])
                              for r in rows})
+
+
+def test_parse_runs_once_per_record(spark, tmp_path):
+    """The parse's filters (url, WARC-Type, HTTP status) stay above its
+    projection: a Filter pushed below it re-runs the decode and the
+    header, URI, type and status regexes for every record. So the
+    executed plan holds the URI pattern once per source branch and no
+    Filter that evaluates a regex."""
+    import gzip
+
+    from eugl_spark.sources.warc import (
+        parse_crawl_records,
+        read_warc_drops,
+        split_warc_records,
+    )
+
+    recs = [_resp_record(f"https://h{i}.example/p", "<p>a page</p>") for i in range(3)]
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "a.warc").write_bytes(b"\r\n\r\n".join(recs) + b"\r\n\r\n")
+    (drop / "b.warc.gz").write_bytes(b"".join(gzip.compress(r + b"\r\n\r\n") for r in recs))
+
+    for df, branches in (
+        (parse_crawl_records(read_warc_drops(spark, str(drop))), 2),
+        (parse_warc_records(split_warc_records(read_raw_drops(spark, str(drop), "*.warc"))), 1),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("WARC-Target-URI") == branches, plan
+        filters = [ln for ln in plan.splitlines() if "Filter" in ln]
+        assert not [ln for ln in filters if "regexp_extract" in ln], plan
+        assert df.count() == 3 * branches
