@@ -1,50 +1,73 @@
-"""Distributed connected components over candidate-pair graphs.
+"""Distributed connected components and link-analysis scores over
+Spark DataFrames.
 
-Two interchangeable implementations with the same contract —
-pairs(doc_a, doc_b) → (doc_id, cluster, keep) where cluster is the
-component's minimum doc_id and keep marks the keeper — because the
-right algorithm depends on graph shape:
+``connected_components_minlabel`` is the one connected-components
+operator: pairs(doc_a, doc_b) → (doc_id, cluster, keep), where cluster
+is the component's minimum doc_id and keep marks that keeper. Each
+round runs one min-label propagation superstep and then one
+pointer-jump, label(v) ← label₀(label(v)), where label₀ is the label
+frame the round started from — the shortcutting of Stergiou et al.,
+"Shortcutting Label Propagation for Distributed Connected Components"
+(WSDM'18). Propagation alone moves a label one hop per superstep, so
+a long chain needs O(n) rounds; the jump lets a label follow the chain
+of labels it points along, so on a chain the reach roughly doubles
+each round (a 2,000-node chain converges in 11 rounds). Near-dup
+families and long chains take the same plan; there is no regime to
+pick.
 
-* ``connected_components_minlabel`` — min-label propagation.
-  O(diameter) supersteps; ideal for near-dup families (small, dense,
-  diameter ≤ a few hops). Used by the dedup registry queries.
-* ``connected_components_star`` — the alternating large-star /
-  small-star algorithm (Kiveris et al., "Connected Components in
-  MapReduce and Beyond"): O(log n) rounds on ANY shape, including the
-  long chains that would starve label propagation. The scale fallback
-  the min-label docstring promises.
-
-Both checkpoint each superstep via ``checkpoint_df`` (iterative
-lineage otherwise grows exponentially): a reliable persisted table per
-round when a checkpoint dir is configured (the 10^12-doc cluster
-path), executor-local blocks otherwise.
+``pagerank`` and ``hits`` score the host graph. Every iterative
+operator here checkpoints its supersteps via ``checkpoint_df``
+(iterative lineage otherwise grows exponentially): a reliable
+persisted table per round when a checkpoint dir is configured (the
+10^12-doc cluster path), executor-local blocks otherwise.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from eugl_spark.operators.checkpoint import checkpoint_df
 
+# PageRank materializes its rank frame every this many supersteps (and
+# always after the last); see pagerank's docstring for the measurement
+_PAGERANK_CHECKPOINT_EVERY = 3
 
-def _cc_output(labels: DataFrame) -> DataFrame:
-    return labels.select(
-        "doc_id",
-        F.col("label").alias("cluster"),
-        (F.col("doc_id") == F.col("label")).alias("keep"),
-    )
+
+def _checkpoint_with_sum(labels: DataFrame):
+    """(checkpointed labels, decimal label-sum). The sum is observed on
+    the checkpoint's own job, so the fixpoint test starts no job of
+    its own; an empty frame sums to None.
+
+    decimal(38,0), not long: hash-derived 63-bit doc_ids overflow a
+    LongType sum under ANSI (job abort), and at 10^12 sequential ids
+    the true sum exceeds 2^63 anyway; decimal is exact to 10^38, so the
+    monotone-decrease fixpoint test stays exact too."""
+    obs = Observation()
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels = checkpoint_df(labels.observe(obs, label_sum))
+    return labels, obs.get["s"]
 
 
 def connected_components_minlabel(pairs: DataFrame) -> DataFrame:
-    """Min-label propagation (see module docstring for when to use).
+    """Min-label propagation with shortcutting (see module docstring).
 
-    Each round every node adopts the smallest label among itself and
-    its neighbors; two supersteps run per materialization (labels only
-    decrease, so a fixpoint of the double step IS a fixpoint of the
-    single step). Labels are monotonically non-increasing, so an
-    unchanged label-sum is the fixpoint test — one scalar agg per
-    round, no full-frame diff.
+    Two invariants hold throughout: every label is the doc_id of a
+    node in the labels frame (labels start as node ids and only ever
+    copy another node's label), and label(v) ≤ v, with labels never
+    increasing. So the pointer-jump — an inner join of the superstep's
+    labels with the round's starting frame on label = doc_id — drops
+    no node, and a round that leaves the label-sum unchanged changed
+    no label: the superstep is at its fixpoint, where every node holds
+    its component's minimum. One checkpoint per round; the sum rides
+    its job.
+
+    The jump reads the round's starting frame, not the superstep's own
+    output: that frame is already materialized, and a self-join of the
+    superstep's union plan fails Catalyst's constraint inference
+    (``NoSuchElementException: key not found`` in Union constraint
+    rewriting) once the checkpointed input carries inferred
+    constraints, as the ANN pair frames do.
     """
     pairs = checkpoint_df(pairs)
     edges = pairs.union(
@@ -56,7 +79,7 @@ def connected_components_minlabel(pairs: DataFrame) -> DataFrame:
     # — no node-distinct pass, no first join. The fixpoint is unique
     # (every node ends at its component minimum) and steps are
     # monotone, so any step schedule reaches the same labels.
-    labels = checkpoint_df(
+    labels, prev_sum = _checkpoint_with_sum(
         edges.groupBy("src")
         .agg(F.min("dst").alias("_mn"))
         .select(
@@ -64,131 +87,29 @@ def connected_components_minlabel(pairs: DataFrame) -> DataFrame:
             F.least(F.col("src"), F.col("_mn")).alias("label"),
         )
     )
-    # decimal(38,0), not long: hash-derived 63-bit doc_ids overflow a
-    # LongType sum under ANSI (job abort), and at 10^12 sequential ids
-    # the true sum exceeds 2^63 anyway; decimal is exact to 10^38 so
-    # the monotone-decrease fixpoint test stays exact too
-    _label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_label_sum).collect()[0][0]
     while True:
-        for _ in range(2):
-            msgs = edges.join(
-                labels, edges["src"] == labels["doc_id"]
-            ).select(F.col("dst").alias("doc_id"), "label")
-            labels = (
-                labels.unionByName(msgs)
-                .groupBy("doc_id")
-                .agg(F.min("label").alias("label"))
-            )
-        labels = checkpoint_df(labels)
-        cur_sum = labels.agg(_label_sum).collect()[0][0]
+        msgs = edges.join(
+            labels, edges["src"] == labels["doc_id"]
+        ).select(F.col("dst").alias("doc_id"), "label")
+        step = (
+            labels.unionByName(msgs)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
+        )
+        labels = (
+            step.alias("v")
+            .join(labels.alias("p"), F.col("v.label") == F.col("p.doc_id"))
+            .select(F.col("v.doc_id"), F.col("p.label"))
+        )
+        labels, cur_sum = _checkpoint_with_sum(labels)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    return _cc_output(labels)
-
-
-def _large_star(canon: DataFrame) -> DataFrame:
-    """(big, small) canonical edges → large-star round: every node's
-    strictly-LARGER neighbors re-link to its minimum neighbor."""
-    sym = canon.union(canon.select(F.col("v"), F.col("u"))).toDF("u", "v")
-    mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-    return (
-        sym.join(mins, "u")
-        .withColumn("m", F.least(F.col("mv"), F.col("u")))
-        .filter(F.col("v") > F.col("u"))
-        .select(
-            F.greatest(F.col("v"), F.col("m")).alias("u"),
-            F.least(F.col("v"), F.col("m")).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    return labels.select(
+        "doc_id",
+        F.col("label").alias("cluster"),
+        (F.col("doc_id") == F.col("label")).alias("keep"),
     )
-
-
-def _small_star(canon: DataFrame) -> DataFrame:
-    """Canonical edges → small-star round: every node's SMALLER
-    neighbors (and the node itself) re-link to its minimum neighbor."""
-    mins = canon.groupBy("u").agg(F.min("v").alias("m"))
-    j = canon.join(mins, "u")
-    relink = j.select(F.col("v").alias("a"), F.col("m").alias("b"))
-    self_link = j.select(F.col("u").alias("a"), F.col("m").alias("b"))
-    return (
-        relink.union(self_link)
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest(F.col("a"), F.col("b")).alias("u"),
-            F.least(F.col("a"), F.col("b")).alias("v"),
-        )
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame, max_rounds: int = 50
-) -> DataFrame:
-    """Alternating large-star/small-star (see module docstring).
-
-    Convergence test: the canonical edge multiset's (count, Σu, Σv)
-    signature is stable across a full round AND one confirming round
-    (signature collisions are astronomically unlikely and the
-    confirming round makes a coincidence harmless — a converged edge
-    set is a fixpoint of both stars, so an extra round is free).
-    """
-    directed = pairs.select(
-        F.greatest(F.col("doc_a"), F.col("doc_b")).alias("u"),
-        F.least(F.col("doc_a"), F.col("doc_b")).alias("v"),
-    )
-    # nodes derive from the UNFILTERED pairs: a doc appearing only in
-    # self-pairs (u == v) has no edges but is still a node and must
-    # surface as its own singleton cluster — the minlabel twin does,
-    # and the two implementations promise the same contract
-    nodes = (
-        directed.select(F.col("u").alias("doc_id"))
-        .union(directed.select(F.col("v").alias("doc_id")))
-        .distinct()
-    )
-    nodes = checkpoint_df(nodes)
-    canon = checkpoint_df(
-        directed.filter(F.col("u") != F.col("v")).distinct()
-    )
-
-    def sig(e: DataFrame):
-        # decimal(38,0) sums, not long: ids may be hash-derived 63-bit
-        # values, and under ANSI (Spark 4 default) a LongType sum over
-        # even two of those can raise ARITHMETIC_OVERFLOW and abort the
-        # job on exactly the scale path this operator exists for —
-        # decimal holds Σ of 10^12 × 2^63 (≈ 9e30 « 10^38) exactly
-        r = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).collect()[0]
-        return (r["n"], r["su"], r["sv"])
-
-    prev, stable = sig(canon), 0
-    for _ in range(max_rounds):
-        canon = checkpoint_df(_small_star(_large_star(canon)))
-        cur = sig(canon)
-        if cur == prev:
-            stable += 1
-            if stable >= 2:
-                break
-        else:
-            stable = 0
-        prev = cur
-    # converged: a star per component — each non-root points straight
-    # at its component min; roots label themselves
-    parent = canon.groupBy("u").agg(F.min("v").alias("label")).select(
-        F.col("u").alias("doc_id"), "label"
-    )
-    labels = (
-        nodes.join(parent, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce(F.col("label"), F.col("doc_id")).alias("label")
-        )
-    )
-    return _cc_output(labels)
 
 
 def _auto_round_dp(n_nodes: int, floor_dp: int = 10) -> int:
@@ -211,8 +132,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    iter_round_dp: int | None = None,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Weighted PageRank over an (src, dst, w) edge frame → (host, rank).
 
@@ -225,12 +144,11 @@ def pagerank(
         w(u,v)/outw(u) + dangle/N), where dangle is the rank mass of
         nodes with no outlinks, redistributed uniformly so Σrank stays
         1 (the full formulation, not the mass-leaking shortcut);
-      * each iteration rounds to ``iter_round_dp`` dp in BOTH engines,
+      * each iteration rounds to _auto_round_dp(N) dp in BOTH engines,
         re-synchronizing float64 summation-order ulps before they can
-        amplify across supersteps (the registry's sigma-clip recipe).
-        Default None → _auto_round_dp(N): precision scales with the
-        node count (the ≤100-node oracle fixtures resolve to the SQL
-        twins' pinned dp=10).
+        amplify across supersteps (the registry's sigma-clip recipe);
+        precision scales with the node count (the ≤100-node oracle
+        fixtures resolve to the SQL twins' pinned dp=10).
 
     Scale shape: the rank frame is O(hosts) — a host graph is orders
     of magnitude smaller than its edge list (~10^8 hosts vs ~10^11
@@ -244,16 +162,15 @@ def pagerank(
     iteration with an anti-join, and the out-weight frame is
     materialized once (loop-invariant — left lazy it re-shuffled the
     edge list in every consumer of every superstep). Supersteps are
-    materialized every ``checkpoint_every`` rounds (and always after
-    the last): each eager checkpoint is a full write+read barrier
+    materialized every _PAGERANK_CHECKPOINT_EVERY rounds (and always
+    after the last): each eager checkpoint is a full write+read barrier
     whose fixed cost dominates short loops, while lineage/plan depth
     only needs to be BOUNDED, not zeroed — with edges/outw/nodes all
     cached, an unmaterialized superstep re-evaluates only slim cached
     reads, so a cadence of 3 measured fastest on the 3-iter scaled
     host graph (1.21 s vs 1.39 at 2, 1.65 at 1; rank values are
     bit-identical at any cadence since a checkpoint is a pure
-    barrier). The node count is a single driver scalar (same class
-    as the CC fixpoint probes).
+    barrier). The node count is a single driver scalar.
     """
     edges = checkpoint_df(
         edges.select("src", "dst", F.col("w").cast("double").alias("w"))
@@ -285,8 +202,7 @@ def pagerank(
     n_nodes = nodes.count()  # scalar probe (teleport term needs N)
     if n_nodes == 0:
         return nodes.select("host").withColumn("rank", F.lit(0.0))
-    if iter_round_dp is None:
-        iter_round_dp = _auto_round_dp(n_nodes)
+    round_dp = _auto_round_dp(n_nodes)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     for it in range(iters):
         dangle = ranks.agg(
@@ -322,21 +238,16 @@ def pagerank(
                         F.coalesce(F.col("contrib"), F.lit(0.0))
                         + F.col("dangle") / n_nodes
                     ),
-                    iter_round_dp,
+                    round_dp,
                 ).alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 or it == iters - 1:
+        if (it + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or it == iters - 1:
             ranks = checkpoint_df(ranks)
     return ranks.select("host", "rank")
 
 
-def hits(
-    edges: DataFrame,
-    iters: int = 3,
-    iter_round_dp: int | None = None,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Weighted HITS over an (src, dst, w) edge frame →
     (host, hub, authority).
 
@@ -353,19 +264,16 @@ def hits(
         contract, same fixpoint directions);
       * nodes with no in-links get authority 0, nodes with no
         out-links get hub 0 (left join + coalesce);
-      * each normalized vector rounds to ``iter_round_dp`` dp in BOTH
+      * each normalized vector rounds to _auto_round_dp(N) dp in BOTH
         engines, re-synchronizing float64 summation-order ulps before
         they amplify across supersteps (the pagerank/sigma-clip
-        recipe). Default None → _auto_round_dp(N), as in pagerank.
+        recipe).
 
     Scale shape: identical to pagerank — O(hosts) score frames joined
     onto the edge list per half-step, partially-aggregated groupBy,
     normalization constants are 1-row frames joined by explicit
     broadcast. Each half-step materializes its doubly-consumed raw
-    aggregate (see _half_step), which bounds plan depth on its own;
-    ``checkpoint_every`` is retained for API compatibility and a
-    checkpoint stays a pure barrier — scores are bit-identical at any
-    cadence.
+    aggregate (see _half_step), which bounds plan depth on its own.
     """
     edges = checkpoint_df(
         edges.select("src", "dst", F.col("w").cast("double").alias("w"))
@@ -380,8 +288,7 @@ def hits(
         return nodes.select(
             "host", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
-    if iter_round_dp is None:
-        iter_round_dp = _auto_round_dp(n_nodes)
+    round_dp = _auto_round_dp(n_nodes)
 
     def _half_step(scores: DataFrame, join_on: str, out_for: str) -> DataFrame:
         """One normalized half-update: scores on `join_on` endpoints
@@ -410,7 +317,7 @@ def hits(
                 "host",
                 F.round(
                     F.coalesce(F.col("raw") / F.col("tot"), F.lit(0.0)),
-                    iter_round_dp,
+                    round_dp,
                 ).alias("s"),
             )
         )

@@ -3076,34 +3076,51 @@ def crawl_corpus_from(
 
 
 def _cc_sql(pairs: str, a: str, b: str) -> str:
-    """CTEs sym/reach (the query needs WITH RECURSIVE): connected
+    """CTEs sym/prop/cc (the query needs WITH RECURSIVE): connected
     components of the undirected graph with one edge per row (a, b) of
-    relation `pairs`. reach(id, r) holds every node r reachable from
-    id, so min(r) per id is its component's min-label representative;
-    a node without an edge has no row."""
-    return f"""sym AS (
-      SELECT {a} AS u, {b} AS v FROM {pairs}
+    relation `pairs`, by plain min-label propagation — the oracle's
+    algorithm and engine both differ from the Spark operator's
+    shortcutting loop.
+
+    sym holds every edge both ways plus a self-edge per node, so one
+    join of prop with sym delivers each node its own label and its
+    neighbors'. It reads `pairs` once (two zipped unnests): a plain
+    CTE is inlined at every reference, so each extra read re-ran the
+    whole pair pipeline. prop(it, id, r, live) is iteration `it`'s
+    label r of each node; live says some label fell in that iteration,
+    and the recursion stops one iteration after the first that is not
+    live. Rows per iteration are O(nodes), iterations O(diameter).
+    cc(id, r) is the last iteration: r is the component's minimum id.
+    A node without an edge has no row; an empty relation gives none."""
+    return f"""sym AS MATERIALIZED (
+      SELECT DISTINCT unnest([{a}, {b}, {a}, {b}]) AS u,
+        unnest([{b}, {a}, {a}, {b}]) AS v
+      FROM {pairs}
+    ), prop(it, id, r, live) AS (
+      SELECT 0, u, min(v), true FROM sym GROUP BY u
       UNION ALL
-      SELECT {b} AS u, {a} AS v FROM {pairs}
-    ), reach(id, r) AS (
-      SELECT DISTINCT u AS id, u AS r FROM sym
-      UNION
-      SELECT reach.id, sym.v FROM reach JOIN sym ON sym.u = reach.r
+      SELECT it + 1, id, r, bool_or(r < pr) OVER () FROM (
+        SELECT p.it, s.v AS id, min(p.r) AS r,
+          min(p.r) FILTER (WHERE s.u = s.v) AS pr
+        FROM prop p JOIN sym s ON s.u = p.id
+        WHERE p.live
+        GROUP BY p.it, s.v)
+    ), cc(id, r) AS (
+      SELECT id, r FROM prop WHERE it = (SELECT max(it) FROM prop)
     )"""
 
 
 # near-dup verdict over _cc_sql: cluster = min doc id, the keeper
-_CC_KEEP_SQL = """SELECT id AS doc_id, min(r) AS cluster, min(r) = id AS keep
-    FROM reach GROUP BY id
+_CC_KEEP_SQL = """SELECT id AS doc_id, r AS cluster, r = id AS keep FROM cc
 """
 
 
 def _host_components_sql(path: str | None = None) -> str:
     """Recursive-CTE oracle for host-graph connected components —
-    reach directly over host STRINGS (min over strings is the
-    representative rule), while the Spark side hashes hosts to int64
-    for the CC operator's decimal fixpoint probe and re-derives the
-    same min-host representative per component; the partition is
+    min-label propagation directly over host STRINGS (min over strings
+    is the representative rule), while the Spark side hashes hosts to
+    int64 for the CC operator's decimal fixpoint sum and re-derives
+    the same min-host representative per component; the partition is
     labeling-independent, so the two agree."""
     return (
         _link_edges_sql("count(*) AS n", path).replace(
@@ -3113,7 +3130,7 @@ def _host_components_sql(path: str | None = None) -> str:
     , """
         + _cc_sql("edges", "src", "dst")
         + """, lab AS MATERIALIZED (
-      SELECT id AS host, min(r) AS component FROM reach GROUP BY id
+      SELECT id AS host, r AS component FROM cc
     )
     SELECT l.host, l.component, cs.component_size
     FROM lab l JOIN (
@@ -5394,9 +5411,9 @@ def dedup_clusters(spark, sf_dir):
     )
 
 
-# min-label propagation suits near-dup families (small diameter); the
-# long-chain-safe O(log n) alternative lives beside it in
-# operators/graph.py (connected_components_star), equivalence-tested
+# the one Spark connected-components operator: min-label propagation
+# with pointer-jumping, safe on near-dup families and long chains alike
+# (operators/graph.py); the oracles' _cc_sql is plain propagation
 from eugl_spark.operators.graph import (  # noqa: E402
     connected_components_minlabel as _connected_components,
 )

@@ -46,7 +46,15 @@ def _record_fields(content_col: str):
     the ingest job under ANSI."""
     rec = F.decode(F.col(content_col), "UTF-8")
     head = F.regexp_extract(rec, _HEAD_RE, 1)
-    url = F.nullif(F.regexp_extract(head, _URI_RE, 1), F.lit(""))
+    # the first URI match, null if none. Not nullif(regexp_extract, ''):
+    # Spark 4 plans nullif as a common-expression With, which the
+    # optimizer pulls into a Project of its own below the parse, so
+    # every record was decoded and its header regexes matched twice.
+    # \S+ never matches empty, so this is null exactly where the
+    # single-match extract is ''.
+    url = F.try_element_at(
+        F.regexp_extract_all(head, F.lit(_URI_RE), 1), F.lit(1)
+    )
     ts = F.try_to_timestamp(
         F.regexp_extract(head, _DATE_RE, 1), F.lit("yyyy-MM-dd'T'HH:mm:ssX")
     )
@@ -262,7 +270,6 @@ def read_warc_drops(
     path: str,
     plain_pattern: str = "*.{warc,wet}",
     gz_pattern: str = "*.{warc,wet}.gz",
-    parity: bool = False,
 ) -> DataFrame:
     """One-call mixed-drop ingestion front: record blobs from a
     directory holding BOTH uncompressed and gzipped WARC/WET shards.
@@ -281,23 +288,18 @@ def read_warc_drops(
 
     Record-byte contract across the two branches: both strip the one
     inter-record separator, so a record duplicated across a plain and
-    a gz shard dedups exactly. ONE documented divergence remains at
-    the default setting: the native branch never charset-transcodes
-    nor de-chunks (those are Python-side, per-record repairs), so a
-    DECLARED-legacy-charset record yields U+FFFD text on the plain
-    branch but clean UTF-8 on the gz branch. ``parity=True`` routes
-    the plain branch through the exact splitter too — byte-identical
-    treatment for both compressions at the cost of the plain branch's
-    all-JVM fast path (pick it when cross-compression dedup of legacy
-    pages matters more than plain-shard throughput)."""
+    a gz shard dedups exactly. ONE documented divergence remains: the
+    native branch never charset-transcodes nor de-chunks (those are
+    Python-side, per-record repairs), so a DECLARED-legacy-charset
+    record yields U+FFFD text on the plain branch but clean UTF-8 on
+    the gz branch. Where cross-compression dedup of legacy pages
+    matters more than plain-shard throughput, read the plain shards
+    with ``read_raw_drops`` and split them with
+    ``split_warc_records_exact``, which treats both compressions
+    byte-identically."""
     from eugl_spark.sources.pages import read_raw_drops
 
-    plain_raw = read_raw_drops(spark, path, plain_pattern)
-    plain = (
-        split_warc_records_exact(plain_raw)
-        if parity
-        else split_warc_records(plain_raw)
-    )
+    plain = split_warc_records(read_raw_drops(spark, path, plain_pattern))
     gz = split_warc_records_exact(read_raw_drops(spark, path, gz_pattern))
     return plain.unionAll(gz)
 

@@ -108,13 +108,11 @@ def test_datasheet_stats_match_percentile_aggregate(spark):
 
 
 def test_cc_fused_init_handles_self_loops_and_chains(spark):
-    """The fused init+first-superstep must agree with the star
-    implementation on self-loop singletons and a long chain (the
-    shapes where a fused first step could plausibly diverge)."""
-    from eugl_spark.operators.graph import (
-        connected_components_minlabel,
-        connected_components_star,
-    )
+    """The fused init+first-superstep must agree with a union-find
+    reference on self-loop singletons and a chain (the shapes where a
+    fused first step could plausibly diverge)."""
+    from eugl_spark.operators.graph import connected_components_minlabel
+    from tests.test_graph_cc import _union_find
 
     pairs = [(1, 1), (2, 3), (3, 4), (4, 5), (5, 6), (9, 9), (7, 8)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
@@ -122,9 +120,5 @@ def test_cc_fused_init_handles_self_loops_and_chains(spark):
         (r["doc_id"], r["cluster"], r["keep"])
         for r in connected_components_minlabel(df).collect()
     }
-    b = {
-        (r["doc_id"], r["cluster"], r["keep"])
-        for r in connected_components_star(df).collect()
-    }
-    assert a == b
+    assert a == {(d, c, d == c) for d, c in _union_find(pairs).items()}
     assert (1, 1, True) in a and (9, 9, True) in a  # self-loop singletons

@@ -1033,3 +1033,38 @@ def test_parse_runs_once_per_record(spark, tmp_path):
         filters = [ln for ln in plan.splitlines() if "Filter" in ln]
         assert not [ln for ln in filters if "regexp_extract" in ln], plan
         assert df.count() == 3 * branches
+
+
+def test_parse_decodes_each_record_in_one_projection(spark, tmp_path):
+    """The url column must not split the parse into two projections.
+    ``nullif`` plans as a common-expression With that the optimizer
+    pulls into a Project of its own below the parse, so each record
+    was decoded and its header regexes matched twice. So the executed
+    plan decodes the record bytes in exactly one Project per source
+    branch."""
+    import gzip
+    import re
+
+    from eugl_spark.sources.warc import (
+        parse_crawl_records,
+        read_warc_drops,
+        split_warc_records,
+    )
+
+    recs = [_resp_record(f"https://h{i}.example/p", "<p>a page</p>") for i in range(3)]
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "a.warc").write_bytes(b"\r\n\r\n".join(recs) + b"\r\n\r\n")
+    (drop / "b.warc.gz").write_bytes(b"".join(gzip.compress(r + b"\r\n\r\n") for r in recs))
+
+    for df, branches in (
+        (parse_crawl_records(read_warc_drops(spark, str(drop))), 2),
+        (parse_warc_records(split_warc_records(read_raw_drops(spark, str(drop), "*.warc"))), 1),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        decoding = [
+            ln for ln in plan.splitlines()
+            if "Project" in ln and re.search(r"decode\(content#", ln)
+        ]
+        assert len(decoding) == branches, plan
+        assert df.count() == 3 * branches
